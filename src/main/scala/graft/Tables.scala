@@ -1,14 +1,19 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import graft.ops.Par
 
-/** Schema-pinned readers for the driver-generated parquet tables
-  * (/root/testdata/sf*). See FIXTURES.md for schemas.
+/** Schema-pinned, cached readers for the generated parquet tables
+  * (`<sfDir>/<table>.parquet`). See FIXTURES.md for schemas.
   *
   * At 100 TB these reads become partitioned parquet scans over object
-  * storage; everything downstream only relies on columnar pruning +
-  * predicate pushdown, which Catalyst applies identically there.
+  * storage, already as wide as the cluster; everything downstream only
+  * relies on columnar pruning + predicate pushdown, which Catalyst
+  * applies identically there. The cache layout adapts to the scan's
+  * statistics (see `layout`): a large table read from a single file is
+  * spread across the cores once, at cache build, instead of leaving
+  * every later scan of it a single task.
   */
 object Tables {
   private def p(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
@@ -26,12 +31,45 @@ object Tables {
   // every spark.read.parquet call runs a footer/schema-inference job,
   // so rebuilding the reader per query would pay one small driver job
   // per table access — with the memo, query construction after first
-  // table touch is fully lazy (asserted in DedupSimSpec).
+  // table touch is fully lazy (asserted in DedupSimSpec and TablesSpec).
   private val cachedOnce = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), DataFrame]
   private def cached(s: SparkSession, d: String, name: String)
       (build: => DataFrame): DataFrame =
-    cachedOnce.getOrElseUpdate((s, d, name), { val df = build; df.cache(); df })
+    cachedOnce.getOrElseUpdate((s, d, name),
+      { val df = layout(build); df.cache(); df })
+
+  /** Scan bytes one task of a cached table's build and of every scan
+    * over it should cover. */
+  private val TargetBytes = BigInt(1L << 20)
+
+  /** The layout a table is cached in. Its width is
+    * `w = min(defaultParallelism, ceil(scanBytes / TargetBytes))`, with
+    * `scanBytes` the file relation's size statistic, so no job runs.
+    *
+    * A scan that already has `w` or more partitions (the wide multi-file
+    * scans of a large deployment) is cached as read: no payload shuffle.
+    * A narrower one — a generated table is ONE parquet file with ONE row
+    * group, so all its rows sit in a single scan partition whatever the
+    * split count — is cached as `repartition(w, k).sortWithinPartitions(k)`
+    * on its leading key column `k` (l_orderkey, o_orderkey, event_id, …).
+    * Scans and partial aggregates over the large tables then run on
+    * every core, the cache build compresses in `w` tasks, and the cached
+    * relation keeps its hash partitioning on `k`, so joins and
+    * aggregations on that key skip one exchange. Small tables (w = 1)
+    * keep their layout: a blanket 32-way layout for every table taxed
+    * each tiny stage ~0.2 s in scheduling. */
+  private def layout(df: DataFrame): DataFrame = {
+    val qe = Par.plan(df)
+    val bytes = qe.optimizedPlan.stats.sizeInBytes
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    val w = BigInt(cores).min((bytes + TargetBytes - 1) / TargetBytes).max(1).toInt
+    if (Par.width(qe.sparkPlan) >= w) df
+    else {
+      val k = col(df.columns.head)
+      df.repartition(w, k).sortWithinPartitions(k)
+    }
+  }
 
   /** Evict and unpersist the memoized reader for table `name` under
     * `d` (no-op when absent) and drop Spark's cached file listing for

@@ -1,25 +1,23 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Operator-local parallelism repair for CPU-DENSE row-local stages
   * (PNG decode, md5 shingle fingerprints, levenshtein verify, to_json
   * row building).
   *
-  * At small SFs a base table is a single parquet file = ONE scan
-  * partition, so a heavy per-row stage runs serial no matter how many
-  * cores the session has (the r19 scaling block's c8≈c32 flat keys).
-  * [[spread]] hash-repartitions the frame on a content key up to the
-  * session's parallelism — but ONLY when the input has fewer
-  * partitions than cores. At 100 TB the scan is already wide, the
-  * condition is false, and no payload-shuffling repartition fires
-  * (guide §8's rule: never move heavy bytes for free).
-  *
-  * Deliberately NOT a blanket cache-layout change: an r20 A/B that
-  * repartitioned every cached base table measured a uniform ~0.2 s/key
-  * task-scheduling tax across the whole 214-key suite (+43 s total
-  * against ~20 s of wins) — parallelism is bought per operator, where
-  * the per-row work actually pays for it.
+  * [[graft.Tables]] caches a base table wider than one partition only
+  * when its scan statistics say it is large enough to pay for it; a
+  * small table (documents, customer, part) stays a single scan
+  * partition, so a heavy per-row stage over it runs serial no matter
+  * how many cores the session has. [[spread]] hash-repartitions the
+  * frame on a content key up to the session's parallelism — but ONLY
+  * when the input has fewer partitions than cores. At 100 TB the scan
+  * is already wide, the condition is false, and no payload-shuffling
+  * repartition fires.
   *
   * Hash placement on a key column (never round-robin/rand) keeps row
   * placement content-deterministic; results stay layout-independent by
@@ -27,12 +25,35 @@ import org.apache.spark.sql.{Column, DataFrame}
   * collections).
   */
 object Par {
-  /** A/B kill-switch (`spark.graft.spread=false` leaves layouts
-    * untouched) so spread-vs-no-spread adjudicates on one binary. */
   def spread(df: DataFrame, key: Column): DataFrame = {
-    val on = df.sparkSession.conf
-      .get("spark.graft.spread", "true").toBoolean
     val n = df.sparkSession.sparkContext.defaultParallelism
-    if (on && df.rdd.getNumPartitions < n) df.repartition(n, key) else df
+    if (width(df) < n) df.repartition(n, key) else df
+  }
+
+  /** A fresh planning of `df`'s analyzed plan. Reading statistics or the
+    * physical plan from it runs no Spark job and leaves `df`'s own query
+    * execution unplanned, so `df` still picks up a cache registered
+    * after this call. (Re-analyzing `df.queryExecution.logical` instead
+    * would resolve a parquet reader again: one schema-inference job.) */
+  def plan(df: DataFrame): QueryExecution =
+    df.sparkSession.sessionState.executePlan(df.queryExecution.analyzed)
+
+  /** Partition count of `df`'s output, read from its physical plan
+    * without executing it. `df.rdd.getNumPartitions` would build the
+    * executed plan and, under AQE, run every shuffle below it — the
+    * build of a not-yet-materialized cached repartition included. */
+  def width(df: DataFrame): Int = width(plan(df).sparkPlan)
+
+  /** A known output partitioning gives the count directly; otherwise the
+    * plan is row-local over its leaves (a projected table or cache), and
+    * the widest leaf decides: a cached relation by its cached plan, a
+    * file scan by its file splits (computed on the driver, no job). */
+  def width(p: SparkPlan): Int = p match {
+    case _ if p.outputPartitioning.numPartitions > 0 =>
+      p.outputPartitioning.numPartitions
+    case a: AdaptiveSparkPlanExec => width(a.executedPlan)
+    case m: InMemoryTableScanExec => width(m.relation.cachedPlan)
+    case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+    case _ => p.children.map(width).foldLeft(1)(math.max)
   }
 }

@@ -72,36 +72,30 @@ object GraftExtensions {
     new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "dot_product"),
     arity("dot_product", 2)(c => graft.functions.DotProduct(c(0), c(1))))
 
-  /** Runtime registration for an existing session (tests, notebooks). */
+  /** Runtime registration for an existing session (tests, notebooks).
+    * Idempotent: a function the session already has is left as it is,
+    * so the many call sites that register before use cost one lookup. */
   def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      arity("cosine_sim", 2)(c => CosineSimilarity(c(0), c(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      arity("dot_product", 2)(c => graft.functions.DotProduct(c(0), c(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min_est",
+    val registry = spark.sessionState.functionRegistry
+    def register(name: String, build: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
+    register("cosine_sim",
+      arity("cosine_sim", 2)(c => CosineSimilarity(c(0), c(1))))
+    register("dot_product",
+      arity("dot_product", 2)(c => graft.functions.DotProduct(c(0), c(1))))
+    register("count_min_est",
       arity("count_min_est", 2)(c =>
-        graft.functions.CountMinEstimate(c(0), c(1)).toAggregateExpression()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles",
+        graft.functions.CountMinEstimate(c(0), c(1)).toAggregateExpression()))
+    register("shingles",
       arity("shingles", 2)(c =>
-        graft.functions.ShinglesGenerator(c(0), c(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_split",
+        graft.functions.ShinglesGenerator(c(0), c(1))))
+    register("cdc_split",
       arity("cdc_split", 3)(c =>
-        graft.functions.CdcSplit(c(0), c(1), c(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "roaring_and_card",
+        graft.functions.CdcSplit(c(0), c(1), c(2))))
+    register("roaring_and_card",
       arity("roaring_and_card", 2)(c =>
-        graft.functions.RoaringAndCard(c(0), c(1))),
-      "built-in")
+        graft.functions.RoaringAndCard(c(0), c(1))))
     // Spark's own Bloom-filter sketch pair (the machinery behind
     // runtime row-group filters), surfaced as SQL functions for the
     // q_filter_bloom prefilter: bloom_agg(xxhash64(x), estItems,
@@ -110,18 +104,14 @@ object GraftExtensions {
     // sketch argument must be a literal or an uncorrelated scalar
     // subquery (BloomFilterMightContain.checkInputDataTypes), which is
     // exactly how the caller supplies it.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
+    register("bloom_agg",
       arity("bloom_agg", 3)(c =>
         new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(c(0), c(1), c(2)).toAggregateExpression()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
+          .BloomFilterAggregate(c(0), c(1), c(2)).toAggregateExpression()))
+    register("bloom_might_contain",
       arity("bloom_might_contain", 2)(c =>
         org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(c(0), c(1))),
-      "built-in")
+          .BloomFilterMightContain(c(0), c(1))))
   }
 }
 

@@ -1,31 +1,11 @@
 package graft
 import java.util.Locale
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // interleaved reps cycle ~104 distinct query plans between a
-      // query's reps; the default 100-entry codegen class cache evicts
-      // everything in between and every rep pays full recompilation —
-      // size it to hold the whole suite's generated classes
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // keep every benched key SELF-CONTAINED: the landmark-BFS memo
-      // (GraphOps.LandmarkMemo) would let closeness pay the BFS once
-      // and hand it to betweenness/brandes/ecc for free — honest for a
-      // production session, dishonest for per-key timings
-      .config("spark.graft.landmarks.memo", "false")
-      // same honesty rule for the shared co-purchase edge build memo
-      .config("spark.graft.edges.memo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // per-key timings: no key may reuse another key's memoized build
+    val spark = Graft.localSession(reuseAcrossKeys = false)
     // HOST CANARY (r18 verdict ask #3): a fixed pure-JVM workload
     // timed before warm-up and again after the timed reps, written
     // INTO the bench JSON as canary_pre/canary_post — every bench

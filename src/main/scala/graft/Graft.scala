@@ -32,6 +32,39 @@ object Graft {
         spark.experimental.extraOptimizations :+ graft.plans.CollapseRedundantCase
   }
 
+  /** The conf of the local session graft's own mains run in (Bench,
+    * Verify and the tools): `cpus` cores with one shuffle partition per
+    * core, UTC and the nanos-parquet flag (see [[init]]), and a codegen
+    * class cache that holds the whole suite — at Spark's default of 100
+    * entries one pass's ~104 plans evict each other and every timing
+    * inflates ~1.8×. With `reuseAcrossKeys = false` both session memos
+    * (the landmark BFS and the co-purchase edge build) are off, so each
+    * key pays its own build: the self-contained per-key timing that
+    * Bench and Profile report. */
+  def localSessionConf(cpus: Int,
+      reuseAcrossKeys: Boolean): Seq[(String, String)] =
+    Seq(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "20000",
+      "spark.ui.enabled" -> "false") ++
+      (if (reuseAcrossKeys) Nil
+       else Seq(graft.ops.LandmarkMemo, graft.ops.EdgeMemo)
+         .map(_.confKey -> "false"))
+
+  /** A session at [[localSessionConf]] on `SPARK_GRAFT_CPUS` cores
+    * (default 4), logging at WARN. */
+  def localSession(reuseAcrossKeys: Boolean): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = localSessionConf(cpus, reuseAcrossKeys)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   private val tableNames = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 

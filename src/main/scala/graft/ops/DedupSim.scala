@@ -495,14 +495,11 @@ object DedupSim {
     dedupNgramOn(Par.spread(Tables.documents(s, d), col("doc_id")))
 
   /** The staged intermediates of the exact-Jaccard/containment pair
-    * pipelines, exposed so tools/DedupProbe can COUNT the production
-    * stages (r17 verdict ask #5: prefix-index rows, candidate pairs,
-    * verified pairs per scale) without recomputing drift-prone
-    * copies. */
-  private[graft] case class PairStages(grams: DataFrame, sizes: DataFrame,
+    * pipelines. */
+  private case class PairStages(grams: DataFrame, sizes: DataFrame,
       prefix: DataFrame, cands: DataFrame, tau: Double)
 
-  private[graft] def ngramStages(documents: DataFrame): PairStages = {
+  private def ngramStages(documents: DataFrame): PairStages = {
     import org.apache.spark.sql.expressions.Window
     val tau = 0.5
     graft.plans.GraftExtensions.registerFunctions(documents.sparkSession)
@@ -588,7 +585,7 @@ object DedupSim {
   def dedupContain(s: SparkSession, d: String): DataFrame =
     dedupContainOn(Par.spread(Tables.documents(s, d), col("doc_id")))
 
-  private[graft] def containStages(documents: DataFrame): PairStages = {
+  private def containStages(documents: DataFrame): PairStages = {
     import org.apache.spark.sql.expressions.Window
     val tau = 0.8
     graft.plans.GraftExtensions.registerFunctions(documents.sparkSession)
@@ -1049,10 +1046,10 @@ object DedupSim {
     * `crossCand` = the cross-list (a, b) id pairs inside the ε band
     * on both projections — the only pairs that still need the full
     * cosine. */
-  private[graft] case class EmbCosParts(
+  private case class EmbCosParts(
       assigned: DataFrame, same: DataFrame, crossCand: DataFrame)
 
-  private[graft] def embCosParts(embeddings: DataFrame,
+  private def embCosParts(embeddings: DataFrame,
       knownCount: Option[Long] = None): EmbCosParts = {
     val s = embeddings.sparkSession
     graft.plans.GraftExtensions.registerFunctions(s)
@@ -1760,7 +1757,7 @@ object DedupSim {
     * deterministic stride sample. The multi-query generalization of
     * [[simAnnIvfPqOn]]: every stage keys by q_id; the per-query LUT
     * union is nQueries·nprobe·m·k rows — still broadcast-sized.
-    * `m`/`k` default to the key's production conf defaults (m=16,
+    * `m`/`k` default to the key's production budget (m=16,
     * k=16 → 64-bit codes); pass the demo budget (m=4, k=4 → 8-bit
     * codes: 4 subspaces × log2(4)=2 bits) or intermediate budgets
     * (m=8, k=16 → 32 bits) to measure how quality scales with the
@@ -2877,40 +2874,25 @@ object DedupSim {
     * [[ivfAssign]] lists + [[embPqModel]] codebooks trained on the
     * pooled residuals.
     *
-    * CODE BUDGET (r18 verdict #1): m/k/nprobe are session confs —
-    * `spark.graft.ivfpq.m` (default 16), `spark.graft.ivfpq.k`
-    * (default 16), `spark.graft.ivfpq.nprobe` (default 2). The
-    * default is m=16 subspaces × log2(16)=4 bits = 64-BIT CODES, the
-    * FAISS production floor; the 8-bit demo budget (m=4, k=4) that
-    * r15-r18 shipped hardcoded measured recall@10 ≈ 0.01-0.05 on
-    * isotropic data (ADC quantization error above the inter-neighbor
-    * gaps — a ranked list indistinguishable from vec_id ties) and
-    * stays reachable only via explicit args (AnnLshSpec's 32-row-LUT
-    * ledger test). No oracle (quantizer is float-iteration-dependent,
-    * like q_sim_ann_ivf); recall vs brute force spec'd in AnnLshSpec,
-    * the measured per-budget distribution in SCALE.md. */
+    * CODE BUDGET (r18 verdict #1): the key runs [[simAnnIvfPqOn]]'s
+    * default m=16, k=16, nprobe=2 — m=16 subspaces × log2(16)=4 bits =
+    * 64-BIT CODES, the FAISS production floor; the 8-bit demo budget
+    * (m=4, k=4) that r15-r18 shipped hardcoded measured recall@10 ≈
+    * 0.01-0.05 on isotropic data (ADC quantization error above the
+    * inter-neighbor gaps — a ranked list indistinguishable from vec_id
+    * ties) and stays reachable only via explicit args (AnnLshSpec's
+    * 32-row-LUT ledger test). No oracle (quantizer is float-iteration-
+    * dependent, like q_sim_ann_ivf); recall vs brute force spec'd in
+    * AnnLshSpec, the measured per-budget distribution in SCALE.md. */
   def simAnnIvfPq(s: SparkSession, d: String): DataFrame =
     simAnnIvfPqOn(Tables.embeddings(s, d), queryVecId = 0L)
 
-  /** The conf-resolved (m, k, nprobe) IVFADC code budget — see
-    * [[simAnnIvfPq]]. */
-  private[graft] def ivfPqConf(s: SparkSession): (Int, Int, Int) = (
-    s.conf.get("spark.graft.ivfpq.m", "16").toInt,
-    s.conf.get("spark.graft.ivfpq.k", "16").toInt,
-    s.conf.get("spark.graft.ivfpq.nprobe", "2").toInt)
-
   /** Core of q_sim_ann_ivfpq over any (vec_id, label, embedding)
-    * frame at the session's conf code budget. */
-  def simAnnIvfPqOn(embeddings: DataFrame, queryVecId: Long): DataFrame = {
-    val (m, k, nprobe) = ivfPqConf(embeddings.sparkSession)
-    simAnnIvfPqOn(embeddings, queryVecId, m, k, nprobe)
-  }
-
-  /** [[simAnnIvfPqOn]] at an explicit code budget: m subspaces of
-    * dim 64/m, k centroids per subspace (log2(k)·m-bit codes), nprobe
-    * probed lists. */
+    * frame at a code budget of m subspaces of dim 64/m, k centroids per
+    * subspace (log2(k)·m-bit codes) and nprobe probed lists — by
+    * default the key's 64-bit budget (see [[simAnnIvfPq]]). */
   def simAnnIvfPqOn(embeddings: DataFrame, queryVecId: Long,
-      m: Int, k: Int, nprobe: Int): DataFrame = {
+      m: Int = 16, k: Int = 16, nprobe: Int = 2): DataFrame = {
     val s = embeddings.sparkSession
     graft.plans.GraftExtensions.registerFunctions(s)
     val dot = (a: String, b: String) => expr(s"dot_product($a, $b)")

@@ -648,19 +648,13 @@ object GraphOps {
     * Frontier rounds are the [[ssspOn]] discipline with a landmark key
     * column; state is O(K·V).
     *
-    * SESSION-SCOPED MEMO (r15): the four landmark keys each need this
-    * BFS over the SAME membership frame — without a memo a Verify pass
-    * runs it four times. [[LandmarkMemo]] keys on (session,
-    * canonicalized membership plan, nLandmarks, maxHop) and pins the
-    * memoized frames with EAGER localCheckpoints it owns (NOT
-    * ScratchCache-registered — the harness's per-key releaseAll must
-    * not free blocks a later key still reads; eager, so the blocks are
-    * fully materialized before any release can run). Disable with
-    * spark.graft.landmarks.memo=false — [[graft.Bench]] does, so every
-    * benched key still pays its own full BFS (the self-contained
-    * per-key timing contract). Values are bit-identical either way
-    * (same plan, only the caching layer differs — asserted in
-    * GraphOpsSpec). */
+    * The four landmark keys each need this BFS over the SAME
+    * membership frame, so it is memoized per session, nLandmarks and
+    * maxHop in [[LandmarkMemo]] (a [[SessionMemo]]: memo-owned eager
+    * pins that survive the per-key releaseAll). Sessions built with
+    * `Graft.localSession(reuseAcrossKeys = false)` (Bench, Profile)
+    * turn it off, so every timed key pays its own full BFS. Values are
+    * bit-identical either way (asserted in GraphOpsSpec). */
   private def landmarkHops(membership: DataFrame, nLandmarks: Int,
       maxHop: Int): (DataFrame, DataFrame, DataFrame) =
     LandmarkMemo.getOrBuild(membership, nLandmarks, maxHop)(
@@ -948,14 +942,14 @@ object GraphOps {
       .select((col("l_orderkey") * 2).as("src"),
         (col("l_partkey") * 2 + 1).as("dst"))
       .distinct()
-    hitsOn(e, iters = longConf(e, "spark.graft.hits.iters", 4L).toInt)
+    hitsOn(e, iters = 4)
   }
 
   /** Core of q_graph_hits over any (src, dst) long edge frame (even
     * ids decode as type "order", odd as "part" on the wire). */
   def hitsOn(edgesIn: DataFrame, iters: Int): DataFrame = {
-    // iters < 1 would leave `auths` undefined below (reachable via the
-    // spark.graft.hits.iters conf) — fail fast with the contract
+    // iters < 1 would leave `auths` undefined below — fail fast with
+    // the contract
     require(iters >= 1, s"hitsOn needs iters >= 1, got $iters")
     val D = DecimalType(38, 18)
     val k0 = (c: Column) => pmod(hash(c), lit(1))
@@ -1424,23 +1418,13 @@ object GraphOps {
     * (measured: q_graph_betweenness 8.7 s at sf0.001 — pure plan work
     * on a 300-row graph — vs 1.3 s truncated). The LAZY checkpoint
     * truncates at construction time, stays job-free, materializes once
-    * on first use; blocks release via ScratchCache like any scratch. */
-  /** Storage level for round checkpoints. Default MEMORY_AND_DISK
-    * (Spark's localCheckpoint default — spills instead of failing
-    * under memory pressure); `spark.graft.checkpoint.memoryOnly=true`
-    * switches to MEMORY_ONLY, the r15-verdict A/B for single-run
-    * variance on disk-contended hosts. MEMORY_ONLY + truncated
-    * lineage means an evicted block is unrecoverable, so the flag is
-    * an experiment knob, not the default. */
-  private[graft] def ckptLevel(s: SparkSession)
-      : org.apache.spark.storage.StorageLevel =
-    if (s.conf.getOption("spark.graft.checkpoint.memoryOnly")
-        .exists(_.trim.toBoolean))
-      org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
+    * on first use; blocks release via ScratchCache like any scratch.
+    * Blocks are stored MEMORY_AND_DISK, so memory pressure spills them
+    * instead of losing a block whose lineage is gone (MEMORY_ONLY was
+    * measured no faster — SCALE.md r16). */
   private def trunc(df: DataFrame): DataFrame = {
-    val t = df.localCheckpoint(false, ckptLevel(df.sparkSession))
+    val t = df.localCheckpoint(false,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ScratchCache.defer(() => unpersistCheckpoint(t))
     t
   }
@@ -1737,14 +1721,13 @@ object GraphOps {
   /** The shared co-purchase SYMMETRIC edge build — labelProp,
     * modularity, louvain and louvain2 all start from this identical
     * sym(u, v) frame (distinct membership → size-tagged co-pairs →
-    * distinct → ∪ reversed → repartition(u)). MEMOIZED per (session,
-    * canonical membership plan) through [[EdgeMemo]], the
-    * LandmarkMemo discipline extended to the edge build (VERDICT r15
-    * #6): a Verify pass runs the four keys back-to-back on one
-    * dataset, so the memo pays the two distincts + co-pair join +
-    * shuffle ONCE instead of four times; Bench disables it
-    * (spark.graft.edges.memo=false) to keep per-key timings
-    * self-contained.
+    * distinct → ∪ reversed → repartition(u)). Memoized per session and
+    * canonical membership plan in [[EdgeMemo]] (a [[SessionMemo]]): a
+    * Verify pass runs the four keys back-to-back on one dataset, so the
+    * memo pays the two distincts + co-pair join + shuffle ONCE instead
+    * of four times. Sessions built with
+    * `Graft.localSession(reuseAcrossKeys = false)` (Bench, Profile)
+    * turn it off to keep per-key timings self-contained.
     *
     * Non-memo layout (r19 hybrid): sym is CHECKPOINTED first (lineage
     * truncated to a scan), then its repartition(u) is CACHED — the
@@ -2228,88 +2211,33 @@ object GraphOps {
   }
 }
 
-/** Session-scoped memo for the shared co-purchase symmetric edge
-  * build (labelProp / modularity / louvain / louvain2) — the
-  * [[LandmarkMemo]] discipline extended to the edge build (VERDICT
-  * r15 #6). Same contract: keyed on (session, canonicalized
-  * membership plan); entries are EAGER memo-owned localCheckpoints;
-  * a miss evicts the previous entry with its pins' release DEFERRED
-  * to the ScratchCache drain; `spark.graft.edges.memo=false` (Bench)
-  * bypasses it for self-contained per-key timings. */
-private[graft] object EdgeMemo {
-  private val entries = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    DataFrame]
-  private val owned =
-    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
-  /** Number of edge builds actually run (test observability). */
-  @volatile private[graft] var builds: Long = 0L
-
-  /** Eagerly pin `df` with a memo-owned localCheckpoint. */
-  private[ops] def pin(df: DataFrame): DataFrame = {
-    val t = df.localCheckpoint(true)
-    owned.add(() => GraphOps.unpersistCheckpoint(t))
-    t
-  }
-
-  private[ops] def getOrBuild(membership: DataFrame)
-      (build: Boolean => DataFrame): DataFrame = {
-    val s = membership.sparkSession
-    val enabled = s.conf.getOption("spark.graft.edges.memo")
-      .forall(_.trim.toBoolean)
-    if (!enabled) { builds += 1; build(false) }
-    else {
-      val k = (s, membership.queryExecution.analyzed.canonicalized)
-      entries.get(k) match {
-        case Some(v) => v
-        case None =>
-          // defer evicted pins to the harness drain — the LandmarkMemo
-          // eviction contract (see there)
-          entries.clear()
-          var r = owned.poll()
-          while (r != null) { ScratchCache.defer(r); r = owned.poll() }
-          val v = { builds += 1; build(true) }
-          entries.put(k, v)
-          v
-      }
-    }
-  }
-
-  /** Unpersist every memo-owned checkpoint and forget all entries. */
-  def clear(): Unit = {
-    entries.clear()
-    var r = owned.poll()
-    while (r != null) { r(); r = owned.poll() }
-  }
-}
-
-/** Session-scoped memo for the landmark BFS shared by the four
-  * landmark keys (closeness / betweenness / brandes / ecc) — VERDICT
-  * r14 ask #4: one Verify pass was running the identical BFS four
-  * times. Keyed on (session, CANONICALIZED membership plan,
-  * nLandmarks, maxHop): the four demo keys build membership from the
-  * memoized [[graft.Tables.lineitem]] frame with the same
-  * filter/select, so their canonicalized plans are equal; any other
-  * frame (tests' hand-built fixtures, a repartitioned copy) misses and
-  * builds fresh.
+/** Session-scoped memo for a graph build that several keys share over
+  * the same dataset: the landmark BFS ([[LandmarkMemo]]: closeness,
+  * betweenness, brandes, ecc) and the co-purchase symmetric edge set
+  * ([[EdgeMemo]]: labelProp, modularity, louvain, louvain2). One
+  * Verify pass runs each family back-to-back, so the memo pays the
+  * build once instead of four times.
   *
-  * Lifecycle: memoized frames are EAGER localCheckpoints owned HERE,
-  * not ScratchCache-registered — Verify's per-key releaseAll must not
-  * free blocks a later landmark key still reads, and eager
+  * Keyed on (session, CANONICALIZED membership plan, extra build
+  * parameters): the demo keys build membership from the memoized
+  * [[graft.Tables.lineitem]] frame with the same filter/select, so
+  * their canonicalized plans are equal; any other frame (tests'
+  * hand-built fixtures, a repartitioned copy) misses and builds fresh.
+  *
+  * Lifecycle: memoized frames are EAGER localCheckpoints owned HERE
+  * ([[pin]]), not ScratchCache-registered — the harness's per-key
+  * releaseAll must not free blocks a later key still reads, and eager
   * materialization means no lazy dependency on scratch blocks that a
-  * release could strand. [[clear]] (tests / notebooks) unpersists and
-  * forgets everything. Memory: lm is K rows, mh is O(K·V), sym is the
-  * symmetric edge set — the same blocks a single key already
-  * checkpointed, now simply outliving one key instead of being rebuilt
-  * four times. */
-private[graft] object LandmarkMemo {
-  private val entries = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, Int),
-    (DataFrame, DataFrame, DataFrame)]
+  * release could strand. [[clear]] unpersists and forgets everything.
+  * `confKey=false` bypasses the memo, so every key pays its own build
+  * (the self-contained per-key timing of Bench and Profile); values
+  * are bit-identical either way (asserted in GraphOpsSpec). */
+private[graft] final class SessionMemo[V](val confKey: String) {
+  private val entries =
+    scala.collection.concurrent.TrieMap.empty[Seq[Any], V]
   private val owned =
     new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
-  /** Number of BFS builds actually run (test observability). */
+  /** Number of builds actually run (test observability). */
   @volatile private[graft] var builds: Long = 0L
 
   /** Eagerly pin `df` with a memo-owned localCheckpoint. */
@@ -2320,40 +2248,28 @@ private[graft] object LandmarkMemo {
   }
 
   /** Memo lookup; on miss, `build(pin)` runs with pin = whether the
-    * memo is enabled (spark.graft.landmarks.memo, default true).
+    * memo is enabled (`confKey`, default true).
     *
-    * SINGLE-ENTRY POLICY: a miss EVICTS the previous entry, so LIVE
-    * pinned blocks are bounded by one BFS (sym + mh + lm) — the four
-    * landmark keys share one dataset per pass, so eviction only fires
-    * on a dataset (or fixture) change, never between the keys the
-    * memo exists for. Evicted pins are NOT unpersisted inline: a
-    * frame returned from the evicted entry may still be
-    * unmaterialized with checkpoint-truncated lineage, so their
-    * release is handed to [[ScratchCache]] and happens at the next
-    * harness drain (releaseAll runs only after every result has been
-    * consumed) — no caller-side materialization ordering is required
-    * (ADVICE r15). */
-  private[ops] def getOrBuild(membership: DataFrame, nLandmarks: Int,
-      maxHop: Int)(build: Boolean => (DataFrame, DataFrame, DataFrame))
-      : (DataFrame, DataFrame, DataFrame) = {
+    * SINGLE-ENTRY POLICY: a miss EVICTS the previous entry, so live
+    * pinned blocks are bounded by one build — the keys a memo serves
+    * share one dataset per pass, so eviction only fires on a dataset
+    * (or fixture) change. Evicted pins are NOT unpersisted inline: a
+    * frame returned from the evicted entry may still be unmaterialized
+    * with checkpoint-truncated lineage, so an immediate unpersist would
+    * strand it. Their release is handed to [[ScratchCache]] and happens
+    * at the next harness drain, which runs only after every result has
+    * been consumed. */
+  private[ops] def getOrBuild(membership: DataFrame, params: Any*)
+      (build: Boolean => V): V = {
     val s = membership.sparkSession
-    val enabled = s.conf.getOption("spark.graft.landmarks.memo")
-      .forall(_.trim.toBoolean)
+    val enabled = s.conf.getOption(confKey).forall(_.trim.toBoolean)
     if (!enabled) { builds += 1; build(false) }
     else {
-      val k = (s, membership.queryExecution.analyzed.canonicalized,
-        nLandmarks, maxHop)
+      val k = Seq(s, membership.queryExecution.analyzed.canonicalized) ++
+        params
       entries.get(k) match {
         case Some(v) => v
         case None =>
-          // EVICT the previous entry but DEFER its block release to
-          // the harness-level ScratchCache drain: a frame returned
-          // from that entry may still be unmaterialized, and the
-          // checkpoint truncated its lineage, so an immediate
-          // unpersist would strand it with missing blocks (ADVICE
-          // r15). ScratchCache.releaseAll runs only once the harness
-          // has consumed every result, which is exactly when the old
-          // pins become safe to drop.
           entries.clear()
           var r = owned.poll()
           while (r != null) { ScratchCache.defer(r); r = owned.poll() }

@@ -8,9 +8,10 @@ package graft.tools
   * main itself runs [[measure]] once before warm-up and once after
   * the timed reps and writes both pairs INTO the bench JSON
   * (`canary_pre`/`canary_post` — verdict r18 ask #3), so every
-  * bench_full_rN_wK.json is self-adjudicating. The workload is a
-  * xorshift-mix loop sized ~1s per leg on a healthy host; results
-  * print as Mops/s (higher = faster host).
+  * bench window record (history/bench/bench_full_rN_wK.json) is
+  * self-adjudicating. The workload is a xorshift-mix loop sized ~1s
+  * per leg on a healthy host; results print as Mops/s (higher =
+  * faster host).
   * Usage: runMain graft.tools.HostCanary [reps]
   */
 object HostCanary {

@@ -1,35 +1,26 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Graft, SparkEntry}
 
-/** Dev utility: run the named queries N times each at the Bench config
-  * with a stage-metrics listener attached, printing per-rep wall time
-  * NEXT TO the executor-side evidence (run time, GC time, memory/disk
-  * spill, shuffle bytes) — the tool for adjudicating whether a bench
-  * excursion was plan cost (run time scales with wall), GC (gcTime
-  * dominates), spill (disk bytes appear), or host contention (wall
-  * inflates while every executor-side number stays flat).
+/** Dev utility: run the named queries (or all) N times each at the
+  * Bench config with a stage-metrics listener attached, printing per-rep
+  * wall time NEXT TO the executor-side evidence (run time, GC time,
+  * memory/disk spill, shuffle bytes), then each query's min and reps —
+  * the tool for timing one slow query without a full bench pass, and
+  * for adjudicating whether a bench excursion was plan cost (run time
+  * scales with wall), GC (gcTime dominates), spill (disk bytes appear),
+  * or host contention (wall inflates while every executor-side number
+  * stays flat).
   * Usage: runMain graft.tools.Profile <sfDir> <reps> [query ...]
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = if (args.length > 1) args(1).toInt else 5
+    val reps = if (args.length > 1) args(1).toInt else 3
     val names = if (args.length > 2) args.drop(2).toSeq
-      else Seq("q_graph_hits")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.graft.landmarks.memo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      else SparkEntry.queries.keys.toSeq.sorted
+    val spark = Graft.localSession(reuseAcrossKeys = false)
     // accumulate stage metrics between marks; listener events are
     // async, so each rep waits for the bus to drain before reading
     val agg = new java.util.concurrent.atomic.AtomicReference(
@@ -58,7 +49,7 @@ object Profile {
       try SparkEntry.queries(n)(spark, sfDir).count() // warm-up
       catch { case e: Throwable => println(s"$n failed: ${e.getMessage}") }
       finally graft.ops.ScratchCache.releaseAll()
-      (1 to reps).foreach { r =>
+      val ts = (1 to reps).flatMap { r =>
         drain(); Thread.sleep(300)
         agg.set(Map.empty[String, Long].withDefaultValue(0L))
         val t0 = System.nanoTime()
@@ -80,7 +71,11 @@ object Profile {
           f"diskSpill=${a("diskSpill") / 1e6}%.1fMB " +
           f"shufR=${a("shufRead") / 1e6}%.1fMB " +
           f"shufW=${a("shufWrite") / 1e6}%.1fMB")
+        if (failed.isEmpty) Some(wall) else None
       }
+      if (ts.nonEmpty)
+        println(f"$n%-22s min=${ts.min}%6.2fs  " +
+          s"reps=${ts.map(t => f"$t%.2f").mkString(",")}")
     }
     spark.stop()
   }

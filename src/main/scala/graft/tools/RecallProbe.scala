@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe (r17 verdict ask #4): measured recall@10 DISTRIBUTION of
@@ -12,16 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Graft.localSession(reuseAcrossKeys = false)
     args.foreach { d =>
       Seq[(String, (org.apache.spark.sql.DataFrame, Int) =>
           org.apache.spark.sql.DataFrame)](
@@ -32,7 +22,7 @@ object RecallProbe {
           graft.ops.DedupSim.ivfPqRecall(df, np, m = 4, k = 4)),
         ("ivfpq32b", (df, np) =>
           graft.ops.DedupSim.ivfPqRecall(df, np, m = 8, k = 16)),
-        // 64-bit codes: the r19 production conf default (m=16, k=16)
+        // 64-bit codes: the key's production budget (m=16, k=16)
         ("ivfpq64b", (df, np) => graft.ops.DedupSim.ivfPqRecall(df, np))
       ).foreach { case (path, recall) =>
         Seq(1, 2, 4).foreach { np =>
